@@ -60,8 +60,8 @@ EXTRACTED_KINDS = (
 # become a minutes-long single-task straggler. 20k spans ≈ a 2000-page
 # document — beyond the reference's own operating envelope (its size
 # classes stop at 50+ pages, tests/test_runpod_medium_ocr.py:25-37).
-# Oversized stored tables bypass the kernels; chunking.chunk_spans
-# route='auto' windows those instead.
+# Stored tables that bypass the kernels meet the same ceiling in
+# chunking.chunk_spans, which fails the job loudly, naming the document.
 MAX_SPANS_PER_DOC = 20_000
 
 # conversion methods — the two-tier pipeline of the reference

@@ -11,24 +11,31 @@ and splits items larger than the budget; this operator re-expresses each
 of those contracts relationally:
 
 - heading context: every span carries the most recent section_header at
-  or before it (last-ignore-nulls window per doc); a chunk reports the
-  heading active at its first piece.
+  or before it; a chunk reports the heading active at its first piece.
 - oversize splitting: a span with more tokens than the budget explodes
   into ceil(n_tok/budget) pieces of at most `budget` tokens each, so no
   chunk is ever forced past the budget by a single long span.
 - whole-doc fallback: a document that yields no chunkable pieces (e.g.
   failed extraction with an empty spans array) still emits exactly one
   empty chunk row — a document is never silently dropped by the chunker
-  (the except-branch of pdf_processor.py:60-69). Implemented with
-  explode_outer, so the fallback costs nothing: no anti-join, no second
-  pass over the extraction kernel.
+  (the except-branch of pdf_processor.py:60-69).
 
 All pure DataFrame code with ZERO exchanges: spans arrive as one
 ordered array per document, so heading propagation, piece explosion,
 the running token budget and the chunk grouping are all higher-order
-functions within that array — extract -> chunk is a single narrow
-stage (plan-asserted). Exactly reproducible in ANSI SQL (oracle in
-queries.py, which still uses the equivalent row-window formulation).
+functions within that array — extract -> chunk (or scan -> chunk over a
+stored table) is a single narrow stage (plan-asserted). Exactly
+reproducible in ANSI SQL (oracle in queries.py, which uses the
+equivalent row-window formulation).
+
+Span ceiling: the in-array prefix fold is quadratic in a document's span
+count, so a document with more than model.MAX_SPANS_PER_DOC spans fails
+the chunk job LOUDLY (raise_error naming the doc_id, its span count and
+the ceiling) instead of becoming a minutes-long single-task straggler.
+Every extraction kernel already degrades such a document to `failed`
+with no spans, so only hand-built or foreign stored tables can hit it.
+The check sits inside the first projection: it costs no extra Spark job
+and never runs the fold on an oversized document.
 
 Media spans (text IS NULL) contribute zero tokens and are excluded from
 chunk text but counted in n_spans, mirroring HybridChunker's text-only
@@ -37,31 +44,19 @@ token budget with preserved item references.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from ..model import K_SECTION_HEADER
+from ..model import MAX_SPANS_PER_DOC
 
 DEFAULT_BUDGET = 40  # tokens per chunk
 
 
-def _tok_arr(col, tokenizer: str):
-    """The token array the budget counts: whitespace words ("ws", the
-    HybridChunker default proxy) or the BPE-ish pre-tokenization
-    ("bpe": alnum runs + per-punctuation tokens, textstats.BPE_RE) —
-    the tokenizer-aware budget of the reference's HybridChunker
-    (pdf_processor.py:44-58 budgets real tokenizer tokens). Both are
-    narrow JVM-side expressions with exact DuckDB analogs."""
-    if tokenizer == "ws":
-        return F.split(col, " ")
-    if tokenizer == "bpe":
-        from .textstats import BPE_RE
-
-        return F.regexp_extract_all(col, F.lit(BPE_RE), F.lit(0))
-    raise ValueError(f"unknown tokenizer {tokenizer!r}")
-
-
 def _tok_sql(col: str, tokenizer: str) -> str:
-    """SQL rendering of _tok_arr (same expressions, parsed JVM-side)."""
+    """The token array the budget counts, as a SQL expression: whitespace
+    words ("ws", the HybridChunker default proxy) or the BPE-ish
+    pre-tokenization ("bpe": alnum runs + per-punctuation tokens,
+    textstats.BPE_RE) — the tokenizer-aware budget of the reference's
+    HybridChunker (pdf_processor.py:44-58 budgets real tokenizer
+    tokens). Both are narrow JVM-side expressions with exact DuckDB
+    analogs."""
     if tokenizer == "ws":
         return f"split({col}, ' ')"
     if tokenizer == "bpe":
@@ -71,16 +66,37 @@ def _tok_sql(col: str, tokenizer: str) -> str:
     raise ValueError(f"unknown tokenizer {tokenizer!r}")
 
 
-def _chunk_spans_hof(
-    df, budget: int = DEFAULT_BUDGET, spans_col: str = "spans", tokenizer: str = "ws"
-):
-    """SQL-string build of the zero-shuffle HOF chunker (r8): the three
-    selects below are the same expression trees _chunk_spans_hof_cols
-    constructs through the Column API, parsed JVM-side in one call each
-    instead of ~150 py4j round-trips (~0.25-0.35 s of driver latency per
-    bench rep). Differential-tested row-equal to the Column reference
-    (test_chunking.test_hof_expr_matches_column_reference); semantics
-    documented on the reference below."""
+def chunk_spans(df, budget: int = DEFAULT_BUDGET, tokenizer: str = "ws"):
+    """DataFrame(doc_id, spans, ...) -> DataFrame(doc_id, chunk_idx,
+    heading, chunk_text, n_tokens, n_spans).
+
+    ZERO-SHUFFLE chunker: the spans already arrive as one ordered array
+    per document, so heading propagation, piece explosion, the running
+    token count and the chunk grouping are all computed WITHIN that
+    array by higher-order functions — no Window, no groupBy, no
+    Exchange of any kind. The three selects below are SQL strings parsed
+    JVM-side in one call each (a Column-API build of the same trees cost
+    ~150 py4j round-trips, ~0.3 s of driver latency per call).
+
+    The fold carries (current heading, running token total, items); a
+    piece p of a span whose earlier spans total C tokens lands in chunk
+    floor((C + p*budget)/budget) — identical to the oracle's row-window
+    cumulative-sum definition because every non-final piece holds
+    exactly `budget` tokens. Chunk indices are contiguous from 0, so
+    chunks are materialized by filtering the piece array per index
+    (pieces stay in (offset, piece_i) order: the first member is the
+    piece whose heading the chunk reports). A section_header with NULL
+    text keeps the previous heading (the oracle's IGNORE NULLS).
+
+    Ordering contract: relies on per-document offset UNIQUENESS, which
+    the extraction kernels guarantee (offsets are the dense span index)
+    and test_chunking.test_offsets_unique_per_doc asserts.
+
+    Per-document cost is O(spans^2) struct copies (the prefix fold
+    rebuilds its items array per span) + O(pieces x chunks) scans — tens
+    of ms at 10^4 spans, minutes at 10^5. A document with more than
+    model.MAX_SPANS_PER_DOC spans therefore fails the job with a
+    USER_RAISED_EXCEPTION naming it (see the module docstring)."""
     B = budget
 
     def ntok(s: str) -> str:
@@ -106,9 +122,17 @@ def _chunk_spans_hof(
         f"concat(acc.items, array(struct(s.offset AS offset, {heading} AS heading, "
         f"{ntok('s')} AS n_tok, s.text AS text, acc.cum AS cum_before))) AS items)"
     )
+    fold = (
+        "aggregate(array_sort(spans, (a, b) -> a.offset - b.offset), "
+        f"{init}, (acc, s) -> {merge})"
+    )
+    too_big = (
+        "raise_error(format_string('chunk_spans: document %s has %d spans, over "
+        f"the MAX_SPANS_PER_DOC ceiling of {MAX_SPANS_PER_DOC}', doc_id, size(spans)))"
+    )
     enr = (
-        f"aggregate(array_sort({spans_col}, (a, b) -> a.offset - b.offset), "
-        f"{init}, (acc, s) -> {merge}) AS enr"
+        f"CASE WHEN size(spans) > {MAX_SPANS_PER_DOC} THEN {too_big} "
+        f"ELSE {fold} END AS enr"
     )
     d = df.selectExpr("doc_id", enr)
 
@@ -142,6 +166,11 @@ def _chunk_spans_hof(
         f"CAST(size(array_distinct(transform({mem}, m -> m.offset))) AS BIGINT) "
         f"AS n_spans)"
     )
+    # the highest chunk actually opened by a piece — NOT floor((total-1)/B):
+    # a trailing zero-token media piece at an exact budget boundary opens
+    # one more (empty-text) chunk, exactly as the oracle's row-windowed
+    # cumulative sum does. Indices below it are all non-empty (consecutive
+    # pieces' cum_before differ by at most B).
     max_idx = (
         "coalesce(array_max(transform(pieces, x -> x.chunk_idx)), CAST(0 AS BIGINT))"
     )
@@ -161,346 +190,4 @@ def _chunk_spans_hof(
         "c.chunk_text AS chunk_text",
         "c.n_tokens AS n_tokens",
         "c.n_spans AS n_spans",
-    )
-
-
-def _chunk_spans_hof_cols(
-    df, budget: int = DEFAULT_BUDGET, spans_col: str = "spans", tokenizer: str = "ws"
-):
-    """DataFrame(doc_id, spans, ...) -> DataFrame(doc_id, chunk_idx,
-    heading, chunk_text, n_tokens, n_spans).
-
-    ZERO-SHUFFLE chunker: the spans already arrive as one ordered array
-    per document, so heading propagation, piece explosion, the running
-    token count and the chunk grouping are all computed WITHIN that
-    array by higher-order functions — no Window, no groupBy, no
-    Exchange of any kind, making the whole extract -> chunk pipeline a
-    single narrow stage at any corpus size. (Rounds 1-2 exploded spans
-    to rows and re-partitioned by doc_id for two windows + a groupBy —
-    the last full-payload shuffle in the flagship pipeline.)
-
-    The fold carries (current heading, running token total, items); a
-    piece p of a span whose earlier spans total C tokens lands in chunk
-    floor((C + p*budget)/budget) — identical to the row-windowed
-    cumulative-sum definition because every non-final piece holds
-    exactly `budget` tokens. Chunk indices are contiguous from 0, so
-    chunks are materialized by filtering the piece array per index
-    (pieces stay in (offset, piece_i) order: first member = the
-    arg-min-ord_key piece whose heading the chunk reports).
-
-    Ordering contract: relies on per-document offset UNIQUENESS, which
-    the extraction kernels guarantee (offsets are the dense span index,
-    corpus.expected_spans) and tests assert at the extraction boundary
-    (test_chunking.test_offsets_unique_per_doc). A document with no
-    chunkable pieces (empty/NULL spans) still emits exactly one empty
-    chunk row — the whole-doc fallback of pdf_processor.py:60-69.
-
-    Per-document cost is O(spans^2) struct copies (the prefix fold
-    rebuilds its items array per span) + O(pieces x chunks) scans (each
-    chunk filters the piece array) — all cheap JVM element operations
-    with no re-tokenization, single-threaded WITHIN one document. At
-    the production budget (~hundreds of tokens) a pathological
-    1000-page / 10^4-span document costs ~10^8 element touches, tens of
-    ms — far below what shipping the corpus through a shuffle costs,
-    and the LPT size-descending partition order (plans/pipeline) already
-    schedules such stragglers first."""
-    B = budget
-
-    def tok(c):
-        return _tok_arr(c, tokenizer)
-
-    def ntok(s):
-        return (
-            F.when(s["text"].isNull(), F.lit(0).cast("long"))
-            .otherwise(F.size(tok(s["text"])).cast("long"))
-        )
-
-    items_t = (
-        "array<struct<offset:int,heading:string,n_tok:bigint,"
-        "text:string,cum_before:bigint>>"
-    )
-    enr_init = F.expr(
-        "struct(CAST('' AS STRING) AS heading, CAST(0 AS BIGINT) AS cum, "
-        f"CAST(array() AS {items_t}) AS items)"
-    )
-
-    def enr_merge(acc, s):
-        # isNotNull guard preserves the old last(ignorenulls=True) /
-        # oracle IGNORE NULLS semantics: a header with NULL text (never
-        # emitted by our kernels, but allowed by the schema) must keep
-        # the previous heading, not poison every later span with NULL
-        heading = F.when(
-            (s["kind"] == K_SECTION_HEADER) & s["text"].isNotNull(), s["text"]
-        ).otherwise(acc["heading"])
-        return F.struct(
-            heading.alias("heading"),
-            (acc["cum"] + ntok(s)).alias("cum"),
-            F.concat(
-                acc["items"],
-                F.array(
-                    F.struct(
-                        s["offset"].alias("offset"),
-                        heading.alias("heading"),
-                        ntok(s).alias("n_tok"),
-                        s["text"].alias("text"),
-                        acc["cum"].alias("cum_before"),
-                    )
-                ),
-            ).alias("items"),
-        )
-
-    sorted_spans = F.array_sort(
-        F.col(spans_col), lambda a, b: a["offset"] - b["offset"]
-    )
-    d = df.select(
-        "doc_id", F.aggregate(sorted_spans, enr_init, enr_merge).alias("enr")
-    )
-
-    def piece_rows(it):
-        n_pieces = F.greatest(F.ceil(it["n_tok"] / B), F.lit(1).cast("long"))
-        return F.transform(
-            F.sequence(F.lit(0).cast("long"), n_pieces - 1),
-            lambda p: F.struct(
-                F.floor((it["cum_before"] + p * B) / B).cast("long").alias("chunk_idx"),
-                it["offset"].alias("offset"),
-                it["heading"].alias("heading"),
-                F.when(it["text"].isNull(), F.lit(None).cast("string"))
-                .otherwise(
-                    F.array_join(
-                        F.slice(tok(it["text"]), (p * B + 1).cast("int"), B), " "
-                    )
-                )
-                .alias("p_text"),
-                F.when(it["text"].isNull(), F.lit(0).cast("long"))
-                .otherwise(F.least(F.lit(B).cast("long"), it["n_tok"] - p * B))
-                .alias("p_tok"),
-            ),
-        )
-
-    d = d.select(
-        "doc_id",
-        F.flatten(F.transform(F.col("enr")["items"], piece_rows)).alias("pieces"),
-    )
-
-    pieces = F.col("pieces")
-
-    def chunk_of(ci):
-        mem = F.filter(pieces, lambda x: x["chunk_idx"] == ci)
-        return F.struct(
-            ci.cast("int").alias("chunk_idx"),
-            F.element_at(mem, 1)["heading"].alias("heading"),
-            F.array_join(
-                F.transform(
-                    F.filter(mem, lambda m: m["p_text"].isNotNull()),
-                    lambda m: m["p_text"],
-                ),
-                " ",
-            ).alias("chunk_text"),
-            F.aggregate(mem, F.lit(0).cast("long"), lambda a, m: a + m["p_tok"]).alias(
-                "n_tokens"
-            ),
-            F.size(F.array_distinct(F.transform(mem, lambda m: m["offset"])))
-            .cast("long")
-            .alias("n_spans"),
-        )
-
-    # the highest chunk actually opened by a piece — NOT floor((total-1)/B):
-    # a trailing zero-token media piece at an exact budget boundary opens
-    # one more (empty-text) chunk, exactly as the row-windowed cumulative
-    # sum did. Indices below it are all non-empty (consecutive pieces'
-    # cum_before differ by at most B, so every budget window below the
-    # max is crossed by some piece).
-    max_idx = F.coalesce(
-        F.array_max(F.transform(pieces, lambda x: x["chunk_idx"])),
-        F.lit(0).cast("long"),
-    )
-    fallback = F.array(
-        F.struct(
-            F.lit(0).cast("int").alias("chunk_idx"),
-            F.lit("").alias("heading"),
-            F.lit("").alias("chunk_text"),
-            F.lit(0).cast("long").alias("n_tokens"),
-            F.lit(0).cast("long").alias("n_spans"),
-        )
-    )
-    chunks = F.when(
-        F.coalesce(F.size(pieces), F.lit(0)) == 0, fallback
-    ).otherwise(F.transform(F.sequence(F.lit(0).cast("long"), max_idx), chunk_of))
-    return (
-        d.select("doc_id", F.explode(chunks).alias("c"))
-        .select(
-            "doc_id",
-            F.col("c.chunk_idx").alias("chunk_idx"),
-            F.col("c.heading").alias("heading"),
-            F.col("c.chunk_text").alias("chunk_text"),
-            F.col("c.n_tokens").alias("n_tokens"),
-            F.col("c.n_spans").alias("n_spans"),
-        )
-    )
-
-
-# span-count ceiling for the HOF fast path: the prefix fold is O(spans^2)
-# struct copies per document (tens of ms at 10^4 spans, but minutes at
-# 10^5 — a single-straggler hazard). The extraction kernels assert this
-# ceiling (model.MAX_SPANS_PER_DOC — a doc beyond it degrades to
-# `failed`), which is what makes route='hof' sound for kernel-fed input;
-# arbitrary stored tables go through route='auto' below.
-_KEY_SHIFT = 1 << 20  # ord_key = offset * 2^20 + piece_i; valid while
-# offsets and piece indices stay below 2^20 (10^6 spans/pieces per doc —
-# far above the ceiling that routes docs here)
-
-
-def _chunk_spans_window(
-    df, budget: int = DEFAULT_BUDGET, spans_col: str = "spans", tokenizer: str = "ws"
-):
-    """The row-window formulation of the SAME chunking semantics (the
-    shape the oracle SQL uses): explode spans to rows, per-doc windows
-    for heading propagation + the running token sum, explode pieces,
-    group by (doc_id, chunk_idx). O(spans log spans) per document — the
-    fallback for documents too large for the in-array prefix fold. Whole
-    documents still colocate (Window/groupBy partition by doc_id), but
-    the per-span work is constant, so a 10^5-span document is ~10^5
-    element operations instead of 10^10.
-
-    Assumes non-empty span arrays (the auto router sends empty/NULL-span
-    docs to the HOF branch, whose explode_outer fallback emits the
-    whole-doc empty chunk row)."""
-    from pyspark.sql import Window
-
-    B = budget
-
-    def tok(c):
-        return _tok_arr(c, tokenizer)
-
-    rows = df.select("doc_id", F.explode(spans_col).alias("s")).select(
-        "doc_id",
-        F.col("s.kind").alias("kind"),
-        F.col("s.text").alias("text"),
-        F.col("s.offset").alias("offset"),
-    )
-    ntok = (
-        F.when(F.col("text").isNull(), F.lit(0).cast("long"))
-        .otherwise(F.size(tok(F.col("text"))).cast("long"))
-    )
-    w = Window.partitionBy("doc_id").orderBy("offset")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    prev = w.rowsBetween(Window.unboundedPreceding, -1)
-    rows = rows.select(
-        "doc_id",
-        "offset",
-        "text",
-        ntok.alias("n_tok"),
-        F.coalesce(
-            F.last(
-                F.when(
-                    (F.col("kind") == K_SECTION_HEADER) & F.col("text").isNotNull(),
-                    F.col("text"),
-                ),
-                ignorenulls=True,
-            ).over(run),
-            F.lit(""),
-        ).alias("heading"),
-        F.coalesce(F.sum(ntok).over(prev), F.lit(0).cast("long")).alias("cum_before"),
-    )
-    n_pieces = F.greatest(F.ceil(F.col("n_tok") / B), F.lit(1).cast("long"))
-    pieces = rows.select(
-        "doc_id",
-        "offset",
-        "heading",
-        "text",
-        "n_tok",
-        "cum_before",
-        F.explode(F.sequence(F.lit(0).cast("long"), n_pieces - 1)).alias("piece_i"),
-    ).select(
-        "doc_id",
-        "offset",
-        "heading",
-        F.floor((F.col("cum_before") + F.col("piece_i") * B) / B)
-        .cast("long")
-        .alias("chunk_idx"),
-        (F.col("offset").cast("long") * _KEY_SHIFT + F.col("piece_i")).alias("ord_key"),
-        F.when(F.col("text").isNull(), F.lit(None).cast("string"))
-        .otherwise(
-            F.array_join(
-                F.slice(tok(F.col("text")), (F.col("piece_i") * B + 1).cast("int"), B),
-                " ",
-            )
-        )
-        .alias("p_text"),
-        F.when(F.col("text").isNull(), F.lit(0).cast("long"))
-        .otherwise(F.least(F.lit(B).cast("long"), F.col("n_tok") - F.col("piece_i") * B))
-        .alias("p_tok"),
-    )
-    return pieces.groupBy("doc_id", F.col("chunk_idx").cast("int").alias("chunk_idx")).agg(
-        F.min_by("heading", "ord_key").alias("heading"),
-        F.array_join(
-            F.filter(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("ord_key", "p_text"))),
-                    lambda x: x["p_text"],
-                ),
-                lambda t: t.isNotNull(),
-            ),
-            " ",
-        ).alias("chunk_text"),
-        F.sum("p_tok").cast("long").alias("n_tokens"),
-        F.countDistinct("offset").cast("long").alias("n_spans"),
-    )
-
-
-def chunk_spans(
-    df,
-    budget: int = DEFAULT_BUDGET,
-    spans_col: str = "spans",
-    tokenizer: str = "ws",
-    route: str = "auto",
-    hof_max_spans: int | None = None,
-):
-    """Route documents to the right chunker formulation.
-
-    route='auto' (default, safe for arbitrary stored tables): documents
-    at or below the span ceiling take the zero-shuffle in-array fold;
-    documents above it take the row-window formulation, so one
-    pathological 10^5-span document cannot become a minutes-long
-    straggler task. The two branches each filter the child plan, so a
-    non-materialized upstream (e.g. a fused extraction kernel) executes
-    twice — for kernel-fed input use route='hof' instead, which is sound
-    because the kernels enforce model.MAX_SPANS_PER_DOC at the
-    extraction boundary (a doc beyond it degrades to `failed` with no
-    spans). When auto-routing WOULD double-evaluate an expensive Python
-    kernel stage (a MapInArrow/MapInPandas in the un-persisted child
-    plan), a RuntimeWarning makes the footgun visible (round-4 verdict
-    item 7) — the fix is route='hof' or persisting the input, both the
-    caller's call; silently caching a corpus-sized frame here would be
-    the worse surprise at scale.
-
-    route='hof' / route='window' force one formulation."""
-    from ..model import MAX_SPANS_PER_DOC
-
-    ceiling = hof_max_spans if hof_max_spans is not None else MAX_SPANS_PER_DOC
-    if route == "hof":
-        return _chunk_spans_hof(df, budget, spans_col, tokenizer)
-    if route == "window":
-        return _chunk_spans_window(df, budget, spans_col, tokenizer)
-    if route != "auto":
-        raise ValueError(f"unknown route {route!r}")
-    if not df.is_cached:
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        if any(k in plan for k in ("MapInArrow", "MapInPandas", "EvalPython")):
-            import warnings
-
-            warnings.warn(
-                "chunk_spans(route='auto') filters its input twice, and this "
-                "input contains a non-materialized Python kernel stage that "
-                "will therefore EXECUTE twice. Kernel-fed input should use "
-                "route='hof' (sound: kernels enforce MAX_SPANS_PER_DOC at the "
-                "extraction boundary) or persist the input first.",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-    n = F.coalesce(F.size(F.col(spans_col)), F.lit(0))
-    small = df.filter(n <= ceiling)
-    big = df.filter(n > ceiling)
-    return _chunk_spans_hof(small, budget, spans_col, tokenizer).unionByName(
-        _chunk_spans_window(big, budget, spans_col, tokenizer)
     )

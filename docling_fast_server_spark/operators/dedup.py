@@ -183,6 +183,7 @@ def _docs(spark, sf_dir) -> DataFrame:
 # unpersist another session's in-flight hash set mid-query. Callers that
 # share one session across threads still coordinate their own
 # clear_caches() timing — release only after every consumer's action.
+import contextlib as _contextlib
 import itertools as _itertools
 import threading as _threading
 import weakref as _weakref
@@ -191,6 +192,27 @@ import weakref as _weakref
 # pipeline stages register (names never reused -> no cross-thread
 # clobbering; a view is a name->plan catalog entry, effectively free)
 _VIEW_IDS = _itertools.count()
+
+
+@_contextlib.contextmanager
+def _temp_views(sess, views: dict):
+    """Register ``name -> DataFrame`` temp views for the spark.sql
+    statements issued inside the block, then drop them. spark.sql
+    analyzes eagerly, so the frames it returned keep the resolved view
+    plans and outlive the catalog entries; nothing named ``__mh*``
+    survives a build, even one that raised. The drop goes through the
+    session catalog, not ``spark.catalog.dropTempView``: the latter also
+    uncaches the view's plan, which here is a registered cache the
+    returned frames still read."""
+    for name, df in views.items():
+        df.createOrReplaceTempView(name)
+    try:
+        yield
+    finally:
+        catalog = sess._jsparkSession.sessionState().catalog()
+        for name in views:
+            catalog.dropTempView(name)
+
 
 _CACHES_LOCK = _threading.Lock()
 # session -> list of JVM DataFrame handles (df._jdf, classic PySpark).
@@ -767,31 +789,31 @@ def _minhash_stages(corpus: DataFrame, bucket_cap: int):
             "coalesce(c_size, CAST(1 AS BIGINT)) AS csize",
         )
     )
-    tagged.createOrReplaceTempView(f"{tag}_tagged")
-    rep_sig = sess.sql(f"SELECT * FROM {tag}_tagged WHERE doc_id = rep")
-    bands_sql = f"""
-        SELECT doc_id, bk.band AS band, bk.key AS key
-        FROM (SELECT doc_id, explode(array({_BAND_STRUCT_EXPRS})) AS bk
-              FROM {tag}_tagged WHERE doc_id = rep)
-    """
-    bands = sess.sql(bands_sql)
-    cand = sess.sql(f"""
-        WITH bands AS ({bands_sql}),
-        hot AS (
-            SELECT band, key FROM bands
-            GROUP BY band, key HAVING count(1) > {bucket_cap}
-        ),
-        capped AS (
-            SELECT b.doc_id AS doc_id, b.band AS band, b.key AS key
-            FROM bands b LEFT ANTI JOIN hot h
-              ON b.band = h.band AND b.key = h.key
-        )
-        SELECT DISTINCT x.doc_a AS doc_a, y.doc_b AS doc_b
-        FROM (SELECT doc_id AS doc_a, band, key FROM capped) x
-        JOIN (SELECT doc_id AS doc_b, band, key FROM capped) y
-          ON x.band = y.band AND x.key = y.key
-        WHERE x.doc_a < y.doc_b
-    """)
+    with _temp_views(sess, {f"{tag}_tagged": tagged}):
+        rep_sig = sess.sql(f"SELECT * FROM {tag}_tagged WHERE doc_id = rep")
+        bands_sql = f"""
+            SELECT doc_id, bk.band AS band, bk.key AS key
+            FROM (SELECT doc_id, explode(array({_BAND_STRUCT_EXPRS})) AS bk
+                  FROM {tag}_tagged WHERE doc_id = rep)
+        """
+        bands = sess.sql(bands_sql)
+        cand = sess.sql(f"""
+            WITH bands AS ({bands_sql}),
+            hot AS (
+                SELECT band, key FROM bands
+                GROUP BY band, key HAVING count(1) > {bucket_cap}
+            ),
+            capped AS (
+                SELECT b.doc_id AS doc_id, b.band AS band, b.key AS key
+                FROM bands b LEFT ANTI JOIN hot h
+                  ON b.band = h.band AND b.key = h.key
+            )
+            SELECT DISTINCT x.doc_a AS doc_a, y.doc_b AS doc_b
+            FROM (SELECT doc_id AS doc_a, band, key FROM capped) x
+            JOIN (SELECT doc_id AS doc_b, band, key FROM capped) y
+              ON x.band = y.band AND x.key = y.key
+            WHERE x.doc_a < y.doc_b
+        """)
     return hsdf, tagged, rep_sig, cand, bands
 
 
@@ -856,35 +878,34 @@ def _minhash_pairs_impl(
     # expansion as ONE sql statement over views of the cached frames
     sess = corpus.sparkSession
     tag = f"__mhp{next(_VIEW_IDS)}"
-    hsdf.createOrReplaceTempView(f"{tag}_hs")
-    tagged.createOrReplaceTempView(f"{tag}_tagged")
-    cand.createOrReplaceTempView(f"{tag}_cand")
-    pairs = sess.sql(f"""
-        WITH ver AS (
-            SELECT doc_a, doc_b, {_JACCARD_EXPR}
-            FROM (
-                SELECT p.doc_a AS doc_a, p.doc_b AS doc_b, a.hs AS hs_a, b.hs AS hs_b
-                FROM {tag}_cand p
-                JOIN {tag}_hs a ON a.doc_id = p.doc_a
-                JOIN {tag}_hs b ON b.doc_id = p.doc_b
+    views = {f"{tag}_hs": hsdf, f"{tag}_tagged": tagged, f"{tag}_cand": cand}
+    with _temp_views(sess, views):
+        pairs = sess.sql(f"""
+            WITH ver AS (
+                SELECT doc_a, doc_b, {_JACCARD_EXPR}
+                FROM (
+                    SELECT p.doc_a AS doc_a, p.doc_b AS doc_b, a.hs AS hs_a, b.hs AS hs_b
+                    FROM {tag}_cand p
+                    JOIN {tag}_hs a ON a.doc_id = p.doc_a
+                    JOIN {tag}_hs b ON b.doc_id = p.doc_b
+                )
+            ),
+            rep_pairs AS (
+                SELECT doc_a, doc_b, jaccard FROM ver
+                WHERE jaccard >= {JACCARD_THRESHOLD}D
+                UNION ALL
+                SELECT doc_id AS doc_a, doc_id AS doc_b, CAST(1.0 AS DOUBLE) AS jaccard
+                FROM {tag}_tagged WHERE doc_id = rep AND csize > 1
             )
-        ),
-        rep_pairs AS (
-            SELECT doc_a, doc_b, jaccard FROM ver
-            WHERE jaccard >= {JACCARD_THRESHOLD}D
-            UNION ALL
-            SELECT doc_id AS doc_a, doc_id AS doc_b, CAST(1.0 AS DOUBLE) AS jaccard
-            FROM {tag}_tagged WHERE doc_id = rep AND csize > 1
-        )
-        SELECT least(a, b) AS doc_a, greatest(a, b) AS doc_b, jaccard
-        FROM (
-            SELECT ma.doc_id AS a, mb.doc_id AS b, p.doc_a, p.doc_b, p.jaccard
-            FROM rep_pairs p
-            JOIN {tag}_tagged ma ON ma.rep = p.doc_a
-            JOIN {tag}_tagged mb ON mb.rep = p.doc_b
-        )
-        WHERE (a < b) OR ((NOT (doc_a = doc_b)) AND (a > b))
-    """)
+            SELECT least(a, b) AS doc_a, greatest(a, b) AS doc_b, jaccard
+            FROM (
+                SELECT ma.doc_id AS a, mb.doc_id AS b, p.doc_a, p.doc_b, p.jaccard
+                FROM rep_pairs p
+                JOIN {tag}_tagged ma ON ma.rep = p.doc_a
+                JOIN {tag}_tagged mb ON mb.rep = p.doc_b
+            )
+            WHERE (a < b) OR ((NOT (doc_a = doc_b)) AND (a > b))
+        """)
     return pairs, bands
 
 

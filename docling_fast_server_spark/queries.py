@@ -219,12 +219,7 @@ CHUNK_BPE_BUDGET = 10  # BPE tokens per chunk (~1.2x whitespace tokens on
 
 
 def q_chunks(spark, sf_dir):
-    # route='hof': kernel-fed input is span-ceiling-guaranteed
-    # (model.MAX_SPANS_PER_DOC enforced at the extraction boundary), so
-    # the zero-shuffle in-array chunker is sound AND the fused
-    # extract -> chunk plan stays one narrow stage (route='auto' would
-    # re-execute the extraction kernel once per routing branch)
-    return chunk_spans(extract_all(spark, sf_dir), budget=CHUNK_BUDGET, route="hof")
+    return chunk_spans(extract_all(spark, sf_dir), budget=CHUNK_BUDGET)
 
 
 def q_chunks_bpe(spark, sf_dir):
@@ -233,9 +228,7 @@ def q_chunks_bpe(spark, sf_dir):
     HybridChunker tokenizer-awareness analog (pdf_processor.py:44-58).
     chunk_text re-serializes the sliced token array (as HybridChunker
     re-serializes through its tokenizer)."""
-    return chunk_spans(
-        extract_all(spark, sf_dir), budget=CHUNK_BPE_BUDGET, tokenizer="bpe", route="hof"
-    )
+    return chunk_spans(extract_all(spark, sf_dir), budget=CHUNK_BPE_BUDGET, tokenizer="bpe")
 
 
 _KEY_SHIFT = 1 << 20  # oracle-only piece ordering key (offset * 2^20 +
@@ -499,7 +492,7 @@ def q_pipeline_e2e(spark, sf_dir):
     # survivors (dropped rows must come back empty, proving the keep-set
     # actually gates the downstream stages)
     chunks = (
-        chunk_spans(extracted, budget=CHUNK_BUDGET, route="hof")
+        chunk_spans(extracted, budget=CHUNK_BUDGET)
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("n_chunks"))
     )

@@ -76,10 +76,10 @@ def test_media_spans_kept_but_textless(spark):
 
 
 def test_offsets_unique_per_doc(spark, sf_dir):
-    """Extraction-boundary contract the chunker's ord_key (offset * 2^20
-    + piece_i) depends on: span offsets are unique within a document
-    (they are the dense span index by construction; a duplicate would
-    make chunk piece order nondeterministic and undercount n_spans)."""
+    """Extraction-boundary contract the chunker's in-array piece order
+    depends on: span offsets are unique within a document (they are the
+    dense span index by construction; a duplicate would make chunk
+    piece order nondeterministic and undercount n_spans)."""
     from pyspark.sql import functions as F
 
     from docling_fast_server_spark.queries import extract_all
@@ -100,10 +100,12 @@ def _model_chunks(spans, B, tokenizer="ws"):
     actual cumulative token counts, floor(cum/B) chunk assignment."""
     import re
 
+    from docling_fast_server_spark.operators.textstats import BPE_RE
+
     def toks(t):
         if tokenizer == "ws":
             return t.split(" ")
-        return re.findall(r"[A-Za-z0-9]+|[^A-Za-z0-9 ]", t)
+        return re.findall(BPE_RE, t)
 
     spans = sorted(spans, key=lambda s: s["offset"])
     heading, cum, pieces = "", 0, []
@@ -196,128 +198,37 @@ def test_chunker_matches_model_on_arbitrary_spans(spark):
             )
 
 
-# ---------------------------------------------------------------------------
-# round-4 verdict item 6: quadratic-fold tripwire — the row-window
-# formulation must exist, match the HOF exactly, and absorb pathological
-# >20k-span documents that the in-array prefix fold would turn into a
-# minutes-long single task.
-# ---------------------------------------------------------------------------
-def _multi_doc(spark, docs):
-    rows = [
-        (
-            doc_id,
-            [
-                {"kind": k, "text": t, "media_ref": m, "offset": i}
-                for i, (k, t, m) in enumerate(spans)
-            ],
-        )
-        for doc_id, spans in docs
-    ]
-    return spark.createDataFrame(
-        rows,
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
-
-
-_MIXED_DOCS = [
-    ("d-empty", []),
-    ("d-media", [("picture", None, "media://1/img/0")]),
-    (
-        "d-small",
-        [
-            ("section_header", "HEAD ONE", None),
-            ("text", "a b c d e f g", None),
-            ("picture", None, "media://2/img/1"),
-        ],
-    ),
-    (
-        "d-long",
-        [
-            ("text", " ".join(f"w{i}" for i in range(23)), None),
-            ("section_header", "LATE HEAD", None),
-            ("text", "x y z", None),
-            ("table", "c1 | c2 | c3", "media://3/tbl/2"),
-            ("text", " ".join(f"v{i}" for i in range(11)), None),
-        ],
-    ),
-]
-
-
-def test_window_route_matches_hof(spark):
-    df = _multi_doc(spark, [d for d in _MIXED_DOCS if d[1]])  # non-empty docs
-    for tokenizer in ("ws", "bpe"):
-        a = sorted(
-            map(tuple, chunk_spans(df, budget=5, tokenizer=tokenizer, route="hof").collect())
-        )
-        b = sorted(
-            map(tuple, chunk_spans(df, budget=5, tokenizer=tokenizer, route="window").collect())
-        )
-        assert a == b
-
-
-def test_auto_route_equals_hof_across_the_ceiling(spark):
-    """auto with a tiny ceiling forces some docs through each branch;
-    output must equal the pure HOF run (including the empty-doc fallback,
-    which always takes the HOF branch)."""
-    df = _multi_doc(spark, _MIXED_DOCS)
-    a = sorted(map(tuple, chunk_spans(df, budget=5, route="hof").collect()))
-    b = sorted(map(tuple, chunk_spans(df, budget=5, route="auto", hof_max_spans=3).collect()))
-    assert a == b
-
-
-def _ref_chunks(spans, B):
-    """Independent Python model of the chunk semantics."""
-    heading, cum, pieces = "", 0, []
-    for s in sorted(spans, key=lambda s: s["offset"]):
-        if s["kind"] == "section_header" and s["text"] is not None:
-            heading = s["text"]
-        toks = s["text"].split(" ") if s["text"] is not None else None
-        ntok = len(toks) if toks is not None else 0
-        for p in range(max((ntok + B - 1) // B, 1)):
-            pieces.append(
-                (
-                    s["offset"],
-                    p,
-                    (cum + p * B) // B,
-                    heading,
-                    " ".join(toks[p * B : (p + 1) * B]) if toks is not None else None,
-                    min(B, ntok - p * B) if toks is not None else 0,
-                )
-            )
-        cum += ntok
-    out = {}
-    for off, p, ci, hd, pt, ptok in pieces:
-        c = out.setdefault(ci, {"heading": hd, "texts": [], "n_tokens": 0, "offsets": set()})
-        if pt is not None:
-            c["texts"].append(pt)
-        c["n_tokens"] += ptok
-        c["offsets"].add(off)
-    return {
-        ci: (c["heading"], " ".join(c["texts"]), c["n_tokens"], len(c["offsets"]))
-        for ci, c in out.items()
-    }
-
-
 def test_big_doc_completes_via_window_route(spark):
-    """A >20k-span document goes through the row-window fallback under
-    route='auto' and produces exactly the reference chunking — instead of
-    an O(spans^2) fold straggler."""
+    """A stored document past model.MAX_SPANS_PER_DOC (25k spans) fails
+    the chunk job loudly, naming the document, its span count and the
+    ceiling — the in-array fold is quadratic in span count, so such a
+    document would otherwise be a minutes-long single-task straggler.
+    There is no longer a row-window route for it to complete through;
+    the test keeps its name and pins the replacement contract. Building
+    the chunk frame itself runs no Spark job."""
+    import pytest
+
+    from docling_fast_server_spark.model import MAX_SPANS_PER_DOC
+
     n = 25_000
-    spans = []
-    for i in range(n):
-        if i % 500 == 0:
-            spans.append({"kind": "section_header", "text": f"H{i}", "media_ref": None, "offset": i})
-        elif i % 97 == 13:
-            spans.append({"kind": "picture", "text": None, "media_ref": f"media://9/img/{i}", "offset": i})
-        else:
-            spans.append({"kind": "text", "text": f"a{i} b{i} c{i}", "media_ref": None, "offset": i})
+    assert n > MAX_SPANS_PER_DOC
+    spans = [
+        {"kind": "text", "text": f"a{i} b{i}", "media_ref": None, "offset": i}
+        for i in range(n)
+    ]
     df = spark.createDataFrame(
         [("d-big", spans)],
         "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    rows = chunk_spans(df, budget=40, route="auto").collect()  # default ceiling
-    got = {r["chunk_idx"]: (r["heading"], r["chunk_text"], r["n_tokens"], r["n_spans"]) for r in rows}
-    assert got == _ref_chunks(spans, 40)
+    sc = spark.sparkContext
+    sc.setJobGroup("chunk-build", "chunk_spans frame construction")
+    try:
+        chunks = chunk_spans(df, budget=40)
+        assert list(sc.statusTracker().getJobIdsForGroup("chunk-build")) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    with pytest.raises(Exception, match=f"d-big has {n} spans.*{MAX_SPANS_PER_DOC}"):
+        chunks.collect()
 
 
 def test_extraction_boundary_enforces_span_ceiling():
@@ -339,59 +250,3 @@ def test_extraction_boundary_enforces_span_ceiling():
     prov = json.dumps({"p": 1, "l": 72.0, "t": 700.0, "r": 292.0, "b": 684.0, "fs": 11.0, "text": "w"})
     with pytest.raises(ValueError, match="span ceiling"):
         extract_pdf_cells_flat(["pdf_cell"] * m, [prov] * m, [None] * m, 0, m)
-
-
-def test_auto_route_warns_on_unmaterialized_kernel_input(spark, sf_dir):
-    """route='auto' over a fused (non-persisted) extraction plan pays
-    double extraction — the guard must surface it; route='hof', a
-    persisted input, and plain stored tables must stay silent."""
-    import warnings
-
-    import pytest
-
-    from docling_fast_server_spark.corpus import docs_raw
-    from docling_fast_server_spark.operators.chunking import chunk_spans
-    from docling_fast_server_spark.operators.dispatch import extract_auto
-
-    fused = extract_auto(docs_raw(spark, sf_dir, which="html").limit(5))
-    with pytest.warns(RuntimeWarning, match="EXECUTE twice"):
-        chunk_spans(fused, route="auto")
-
-    with warnings.catch_warnings():
-        warnings.simplefilter("error")  # any warning -> failure
-        chunk_spans(fused, route="hof")  # forced route: no double eval
-        cached = fused.persist()
-        try:
-            chunk_spans(cached, route="auto")  # materialized: safe
-        finally:
-            cached.unpersist()
-
-
-def test_hof_expr_matches_column_reference(spark, sf_dir):
-    """The r8 SQL-string build of the HOF chunker must be row-identical
-    to the Column-API reference on the real extracted corpus (both
-    tokenizers), including the empty-spans whole-doc fallback."""
-    from pyspark.sql import functions as F
-
-    from docling_fast_server_spark.operators import chunking as C
-    from docling_fast_server_spark.queries import extract_all
-
-    base = extract_all(spark, sf_dir).persist()
-    with_empty = base.unionByName(
-        base.limit(1).select(
-            F.lit("doc-empty").alias("doc_id"),
-            F.expr("CAST(array() AS array<struct<kind:string,text:string,"
-                   "media_ref:string,offset:int>>)").alias("spans"),
-            F.lit("failed").alias("conversion_method"),
-            F.lit(None).cast("string").alias("error"),
-        )
-    )
-    for tokenizer, budget in (("ws", 8), ("bpe", 10)):
-        got = sorted(map(tuple, C._chunk_spans_hof(
-            with_empty, budget=budget, tokenizer=tokenizer).collect()))
-        want = sorted(map(tuple, C._chunk_spans_hof_cols(
-            with_empty, budget=budget, tokenizer=tokenizer).collect()))
-        assert got == want and len(got) > 500
-        assert any(r[0] == "doc-empty" for r in got)
-    base.unpersist()  # shared-session hygiene: test_escaping asserts
-    # zero persistent RDDs survive clear_caches

@@ -124,6 +124,26 @@ def test_dedup_clear_caches_releases_blocks(spark, sf_dir):
     assert dedup.clear_caches() == 0  # idempotent
 
 
+def test_dedup_leaves_no_temp_views(spark, sf_dir, tmp_path):
+    """The SQL-issued minhash stages register uniquely named temp views
+    (``__mh*``); a dedup run followed by clear_caches must leave none of
+    them in the session catalog."""
+    from docling_fast_server_spark.operators import dedup
+    from docling_fast_server_spark.plans.pipeline import run_dedup
+
+    try:
+        run_dedup(
+            dedup.mutated_corpus(spark, sf_dir),
+            str(tmp_path / "kept"),
+            str(tmp_path / "metrics"),
+            run_id="views",
+        )
+    finally:
+        dedup.clear_caches(spark)
+    leaked = [t.name for t in spark.catalog.listTables() if t.name.startswith("__mh")]
+    assert leaked == []
+
+
 def test_dedup_cache_registry_is_session_scoped(spark, sf_dir):
     """clear_caches(other_session) must not release THIS session's
     in-flight caches (ADVICE r04: the registry was a process-global

@@ -72,22 +72,29 @@ def test_exports_stay_jvm_side(spark, sf_dir):
     assert "Exchange" not in full
 
 
-def test_chunking_is_shuffle_free(spark, sf_dir):
+def test_chunking_is_shuffle_free(spark, sf_dir, tmp_path):
     """The chunker computes heading propagation, piece explosion, the
     running token count and chunk grouping WITHIN each document's span
     array (higher-order functions), so extract -> chunk is one narrow
     stage: no Exchange, no Window, no Python eval. (Rounds 1-2 exploded
-    to rows and hash-partitioned the full span payload by doc_id.)"""
+    to rows and hash-partitioned the full span payload by doc_id.) The
+    same holds over a stored extraction table (the batch convert shape):
+    one scan, no Union of routing branches."""
     from docling_fast_server_spark.operators.chunking import chunk_spans
     from docling_fast_server_spark.queries import extract_all
 
     for kw in ({}, {"budget": 10, "tokenizer": "bpe"}):
-        # route='hof' is what the fused pipeline queries use (kernel-fed
-        # input is span-ceiling-guaranteed, see q_chunks)
-        plan = _plan(chunk_spans(extract_all(spark, sf_dir), route="hof", **kw))
+        plan = _plan(chunk_spans(extract_all(spark, sf_dir), **kw))
         assert "BatchEvalPython" not in plan
         assert "Exchange" not in plan, plan
         assert "Window" not in plan, plan
+
+    stored = str(tmp_path / "extracted")
+    extract_all(spark, sf_dir).write.parquet(stored)
+    plan = _plan(chunk_spans(spark.read.parquet(stored)))
+    for node in ("Exchange", "Window", "Union"):
+        assert node not in plan, plan
+    assert plan.count("FileScan") == 1, plan
 
 
 def test_scan_pushdown(spark, sf_dir):
