@@ -55,13 +55,13 @@ EXTRACTED_KINDS = (
 
 # Per-document span ceiling enforced at the extraction boundary: a doc
 # whose extraction yields more spans degrades to `failed` (degrade-never-
-# die), because downstream in-array operators (the zero-shuffle chunker's
-# prefix fold) are quadratic in span count and a 10^5-span document would
-# become a minutes-long single-task straggler. 20k spans ≈ a 2000-page
-# document — beyond the reference's own operating envelope (its size
-# classes stop at 50+ pages, tests/test_runpod_medium_ocr.py:25-37).
-# Stored tables that bypass the kernels meet the same ceiling in
-# chunking.chunk_spans, which fails the job loudly, naming the document.
+# die). It is the extraction envelope: 20k spans ≈ a 2000-page document —
+# beyond the reference's own operating envelope (its size classes stop at
+# 50+ pages, tests/test_runpod_medium_ocr.py:25-37). It also bounds the
+# stride count of the zero-shuffle chunker's log-step prefix scan
+# (strides 1, 2, 4, ... below the ceiling). Stored tables that bypass the
+# kernels meet the same ceiling in chunking.chunk_spans, which fails the
+# job loudly, naming the document.
 MAX_SPANS_PER_DOC = 20_000
 
 # conversion methods — the two-tier pipeline of the reference

@@ -28,14 +28,15 @@ stored table) is a single narrow stage (plan-asserted). Exactly
 reproducible in ANSI SQL (oracle in queries.py, which uses the
 equivalent row-window formulation).
 
-Span ceiling: the in-array prefix fold is quadratic in a document's span
-count, so a document with more than model.MAX_SPANS_PER_DOC spans fails
-the chunk job LOUDLY (raise_error naming the doc_id, its span count and
-the ceiling) instead of becoming a minutes-long single-task straggler.
-Every extraction kernel already degrades such a document to `failed`
-with no spans, so only hand-built or foreign stored tables can hit it.
-The check sits inside the first projection: it costs no extra Spark job
-and never runs the fold on an oversized document.
+Span ceiling: model.MAX_SPANS_PER_DOC is the extraction envelope, and it
+also fixes how many strides the log-step prefix scan may take. A
+document with more spans fails the chunk job LOUDLY (raise_error naming
+the doc_id, its span count and the ceiling) rather than being chunked
+past the envelope the kernels enforce. Every extraction kernel already
+degrades such a document to `failed` with no spans, so only hand-built
+or foreign stored tables can hit it. The check sits inside the first
+projection: it costs no extra Spark job and never sorts, tokenizes or
+scans an oversized document.
 
 Media spans (text IS NULL) contribute zero tokens and are excluded from
 chunk text but counted in n_spans, mirroring HybridChunker's text-only
@@ -56,14 +57,21 @@ def _tok_sql(col: str, tokenizer: str) -> str:
     textstats.BPE_RE) — the tokenizer-aware budget of the reference's
     HybridChunker (pdf_processor.py:44-58 budgets real tokenizer
     tokens). Both are narrow JVM-side expressions with exact DuckDB
-    analogs."""
+    analogs. The pattern is escaped for Spark's string-literal parser
+    (backslash and quote), so it reaches the regex engine unmangled."""
     if tokenizer == "ws":
         return f"split({col}, ' ')"
     if tokenizer == "bpe":
         from .textstats import BPE_RE
 
-        return f"regexp_extract_all({col}, '{BPE_RE}', 0)"
+        lit = BPE_RE.replace("\\", "\\\\").replace("'", "\\'")
+        return f"regexp_extract_all({col}, '{lit}', 0)"
     raise ValueError(f"unknown tokenizer {tokenizer!r}")
+
+
+# scan strides 1, 2, 4, ... below the span ceiling: 2^K is the largest
+# power of two under MAX_SPANS_PER_DOC, so K+1 steps cover any document
+_K = (MAX_SPANS_PER_DOC - 1).bit_length() - 1
 
 
 def chunk_spans(df, budget: int = DEFAULT_BUDGET, tokenizer: str = "ws"):
@@ -74,105 +82,108 @@ def chunk_spans(df, budget: int = DEFAULT_BUDGET, tokenizer: str = "ws"):
     per document, so heading propagation, piece explosion, the running
     token count and the chunk grouping are all computed WITHIN that
     array by higher-order functions — no Window, no groupBy, no
-    Exchange of any kind. The three selects below are SQL strings parsed
+    Exchange of any kind. The selects below are SQL strings parsed
     JVM-side in one call each (a Column-API build of the same trees cost
     ~150 py4j round-trips, ~0.3 s of driver latency per call).
+    Every array a later select reads inside a lambda is also passed
+    through or read twice, so the optimizer keeps the selects as
+    separate Projects instead of inlining (and re-evaluating) it per
+    element.
 
-    The fold carries (current heading, running token total, items); a
-    piece p of a span whose earlier spans total C tokens lands in chunk
-    floor((C + p*budget)/budget) — identical to the oracle's row-window
-    cumulative-sum definition because every non-final piece holds
-    exactly `budget` tokens. Chunk indices are contiguous from 0, so
-    chunks are materialized by filtering the piece array per index
-    (pieces stay in (offset, piece_i) order: the first member is the
-    piece whose heading the chunk reports). A section_header with NULL
-    text keeps the previous heading (the oracle's IGNORE NULLS).
+    1. sort the spans by offset and tokenize each text ONCE into an
+       array<array<string>> (`tk`);
+    2. a log-step inclusive prefix scan (Hillis-Steele) over the
+       strides 1, 2, 4, ... < size: `c` accumulates token totals, `h`
+       the index of the last section_header with non-NULL text (-1
+       before the first; a NULL-text header keeps the previous heading,
+       the oracle's IGNORE NULLS). The accumulator is a lambda variable,
+       so no step copies the span array;
+    3. span i with earlier spans totalling e tokens explodes into one
+       piece per `budget`-token slice, t = e, e+budget, ...; the piece
+       lands in chunk floor(t/budget) — identical to the oracle's
+       row-window cumulative-sum definition because every non-final
+       piece holds exactly `budget` tokens. A piece holds only integers
+       (chunk, span index, first token, token count);
+    4. consecutive pieces' chunk indices differ by at most 1, so chunks
+       are contiguous runs of the piece array: the positions where the
+       index changes are the chunk starts and each chunk is one slice.
+       A chunk reports the heading of its first piece's span, joins its
+       pieces' slices of `tk` and counts the span-index range it covers.
 
     Ordering contract: relies on per-document offset UNIQUENESS, which
     the extraction kernels guarantee (offsets are the dense span index)
     and test_chunking.test_offsets_unique_per_doc asserts.
 
-    Per-document cost is O(spans^2) struct copies (the prefix fold
-    rebuilds its items array per span) + O(pieces x chunks) scans — tens
-    of ms at 10^4 spans, minutes at 10^5. A document with more than
-    model.MAX_SPANS_PER_DOC spans therefore fails the job with a
+    Per-document cost is O(n log n) for the scan over n spans plus
+    O(tokens + pieces) for tokenizing, slicing and grouping. A document
+    with more than model.MAX_SPANS_PER_DOC spans fails the job with a
     USER_RAISED_EXCEPTION naming it (see the module docstring)."""
     B = budget
 
-    def ntok(s: str) -> str:
-        return (
-            f"CASE WHEN {s}.text IS NULL THEN CAST(0 AS BIGINT) "
-            f"ELSE CAST(size({_tok_sql(f'{s}.text', tokenizer)}) AS BIGINT) END"
-        )
-
-    items_t = (
-        "array<struct<offset:int,heading:string,n_tok:bigint,"
-        "text:string,cum_before:bigint>>"
-    )
-    init = (
-        "struct(CAST('' AS STRING) AS heading, CAST(0 AS BIGINT) AS cum, "
-        f"CAST(array() AS {items_t}) AS items)"
-    )
-    heading = (
-        "CASE WHEN s.kind = 'section_header' AND s.text IS NOT NULL "
-        "THEN s.text ELSE acc.heading END"
-    )
-    merge = (
-        f"struct({heading} AS heading, (acc.cum + {ntok('s')}) AS cum, "
-        f"concat(acc.items, array(struct(s.offset AS offset, {heading} AS heading, "
-        f"{ntok('s')} AS n_tok, s.text AS text, acc.cum AS cum_before))) AS items)"
-    )
-    fold = (
-        "aggregate(array_sort(spans, (a, b) -> a.offset - b.offset), "
-        f"{init}, (acc, s) -> {merge})"
-    )
     too_big = (
         "raise_error(format_string('chunk_spans: document %s has %d spans, over "
         f"the MAX_SPANS_PER_DOC ceiling of {MAX_SPANS_PER_DOC}', doc_id, size(spans)))"
     )
-    enr = (
+    d = df.selectExpr(
+        "doc_id",
         f"CASE WHEN size(spans) > {MAX_SPANS_PER_DOC} THEN {too_big} "
-        f"ELSE {fold} END AS enr"
+        "ELSE array_sort(spans, (a, b) -> a.offset - b.offset) END AS s",
     )
-    d = df.selectExpr("doc_id", enr)
+    d = d.selectExpr("doc_id", "s", f"transform(s, x -> {_tok_sql('x.text', tokenizer)}) AS tk")
 
-    p_text = (
-        "CASE WHEN it.text IS NULL THEN CAST(NULL AS STRING) ELSE "
-        f"array_join(slice({_tok_sql('it.text', tokenizer)}, "
-        f"CAST(p * {B} + 1 AS INT), {B}), ' ') END"
+    strides = (
+        f"filter(transform(sequence(0, {_K}), k -> CAST(pow(2, k) AS INT)), "
+        "d -> d < size(s))"
     )
-    p_tok = (
-        "CASE WHEN it.text IS NULL THEN CAST(0 AS BIGINT) ELSE "
-        f"least(CAST({B} AS BIGINT), it.n_tok - p * {B}) END"
+    init = (
+        "struct(transform(tk, t -> CASE WHEN t IS NULL THEN CAST(0 AS BIGINT) "
+        "ELSE CAST(size(t) AS BIGINT) END) AS c, "
+        "transform(s, (x, i) -> CASE WHEN x.kind = 'section_header' "
+        "AND x.text IS NOT NULL THEN i ELSE -1 END) AS h)"
     )
-    piece_rows = (
-        f"transform(sequence(CAST(0 AS BIGINT), "
-        f"greatest(CEIL(it.n_tok / {B}), CAST(1 AS BIGINT)) - 1), "
-        f"p -> struct(CAST(FLOOR((it.cum_before + p * {B}) / {B}) AS BIGINT) "
-        f"AS chunk_idx, it.offset AS offset, it.heading AS heading, "
-        f"{p_text} AS p_text, {p_tok} AS p_tok))"
+    step = (
+        "struct(transform(acc.c, (x, i) -> x + coalesce(get(acc.c, i - d), 0)) AS c, "
+        "transform(acc.h, (x, i) -> greatest(x, get(acc.h, i - d))) AS h)"
     )
     d = d.selectExpr(
-        "doc_id", f"flatten(transform(enr.items, it -> {piece_rows})) AS pieces"
+        "doc_id", "s", "tk", f"aggregate({strides}, {init}, (acc, d) -> {step}) AS sc"
     )
 
-    mem = "filter(pieces, x -> x.chunk_idx = ci)"
-    chunk_of = (
-        f"struct(CAST(ci AS INT) AS chunk_idx, "
-        f"element_at({mem}, 1).heading AS heading, "
-        f"array_join(transform(filter({mem}, m -> m.p_text IS NOT NULL), "
-        f"m -> m.p_text), ' ') AS chunk_text, "
-        f"aggregate({mem}, CAST(0 AS BIGINT), (a, m) -> a + m.p_tok) AS n_tokens, "
-        f"CAST(size(array_distinct(transform({mem}, m -> m.offset))) AS BIGINT) "
-        f"AS n_spans)"
+    # span i, inclusive total c, exclusive total e: one piece per slice
+    # t = e, e+B, ... (a single piece when the span has no tokens)
+    e = "coalesce(get(sc.c, i - 1), CAST(0 AS BIGINT))"
+    piece_rows = (
+        f"transform(sequence({e}, greatest(c - 1, {e}), CAST({B} AS BIGINT)), "
+        f"t -> struct(t div {B} AS chunk_idx, i AS i, CAST(t - {e} AS INT) AS tok0, "
+        f"least(CAST({B} AS BIGINT), c - t) AS p_tok))"
     )
-    # the highest chunk actually opened by a piece — NOT floor((total-1)/B):
-    # a trailing zero-token media piece at an exact budget boundary opens
-    # one more (empty-text) chunk, exactly as the oracle's row-windowed
-    # cumulative sum does. Indices below it are all non-empty (consecutive
-    # pieces' cum_before differ by at most B).
-    max_idx = (
-        "coalesce(array_max(transform(pieces, x -> x.chunk_idx)), CAST(0 AS BIGINT))"
+    d = d.selectExpr(
+        "doc_id", "s", "tk", "sc", f"flatten(transform(sc.c, (c, i) -> {piece_rows})) AS pieces"
+    )
+
+    # NULL when there are no pieces (empty or NULL spans): the fallback row
+    d = d.selectExpr(
+        "doc_id",
+        "s",
+        "tk",
+        "sc",
+        "pieces",
+        "CASE WHEN size(pieces) > 0 THEN filter(sequence(1, size(pieces)), "
+        "i -> i = 1 OR pieces[i - 1].chunk_idx <> pieces[i - 2].chunk_idx) END AS starts",
+    )
+    members = (
+        "transform(starts, (st, j) -> slice(pieces, st, "
+        "coalesce(get(starts, j + 1), size(pieces) + 1) - st))"
+    )
+    # a media piece's slice is NULL, and array_join skips NULLs; the spans
+    # of a chunk are the contiguous index range of its first..last piece
+    chunk_of = (
+        "struct(CAST(m[0].chunk_idx AS INT) AS chunk_idx, "
+        "coalesce(get(s, sc.h[m[0].i]).text, '') AS heading, "
+        f"array_join(transform(m, q -> array_join(slice(tk[q.i], q.tok0 + 1, {B}), ' ')), ' ') "
+        "AS chunk_text, "
+        "aggregate(m, CAST(0 AS BIGINT), (a, q) -> a + q.p_tok) AS n_tokens, "
+        "CAST(element_at(m, -1).i - m[0].i + 1 AS BIGINT) AS n_spans)"
     )
     fallback = (
         "array(struct(CAST(0 AS INT) AS chunk_idx, '' AS heading, "
@@ -180,8 +191,8 @@ def chunk_spans(df, budget: int = DEFAULT_BUDGET, tokenizer: str = "ws"):
         "CAST(0 AS BIGINT) AS n_spans))"
     )
     chunks = (
-        f"CASE WHEN coalesce(size(pieces), 0) = 0 THEN {fallback} "
-        f"ELSE transform(sequence(CAST(0 AS BIGINT), {max_idx}), ci -> {chunk_of}) END"
+        f"CASE WHEN starts IS NULL THEN {fallback} "
+        f"ELSE transform({members}, m -> {chunk_of}) END"
     )
     return d.selectExpr("doc_id", f"explode({chunks}) AS c").selectExpr(
         "doc_id",

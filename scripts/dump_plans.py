@@ -33,7 +33,8 @@ def main() -> None:
         "  Scan -> MapInArrow [-> Generate]),",
         "- scans: `PushedFilters` + pruned `ReadSchema`,",
         "- dims (hash params, hyperplanes, query vectors): `BroadcastHashJoin`/`BroadcastNestedLoopJoin`,",
-        "- chunking: **zero Exchange** (Scan -> fused MapInArrow -> Generate),",
+        "- chunking: **zero Exchange** (Scan -> fused MapInArrow -> in-array",
+        "  Projects: sort, tokenize, prefix scan, pieces, chunk starts -> Generate),",
         "- dedup_minhash: NO distinct-shingle dictionary stages — signatures are",
         "  narrow `array_min(transform(...))` projections; the only wide ops are",
         "  the band self-join and the candidate-verify joins,",

@@ -6,6 +6,11 @@ from pyspark.sql import functions as F
 from docling_fast_server_spark.operators.chunking import chunk_spans
 
 
+_SPANS_DDL = (
+    "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+)
+
+
 def _doc(spark, doc_id, spans):
     rows = [
         (doc_id, [
@@ -13,10 +18,7 @@ def _doc(spark, doc_id, spans):
             for i, (k, t, m) in enumerate(spans)
         ])
     ]
-    return spark.createDataFrame(
-        rows,
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
+    return spark.createDataFrame(rows, _SPANS_DDL)
 
 
 def test_heading_context_propagates(spark):
@@ -96,8 +98,9 @@ def test_offsets_unique_per_doc(spark, sf_dir):
 
 def _model_chunks(spans, B, tokenizer="ws"):
     """Independent Python model of the chunker contract (the row-window
-    formulation the oracle uses): running heading, piece explosion with
-    actual cumulative token counts, floor(cum/B) chunk assignment."""
+    formulation the oracle uses): running heading (a section_header with
+    NULL text keeps the previous one), piece explosion with actual
+    cumulative token counts, floor(cum/B) chunk assignment."""
     import re
 
     from docling_fast_server_spark.operators.textstats import BPE_RE
@@ -110,7 +113,7 @@ def _model_chunks(spans, B, tokenizer="ws"):
     spans = sorted(spans, key=lambda s: s["offset"])
     heading, cum, pieces = "", 0, []
     for s in spans:
-        if s["kind"] == "section_header":
+        if s["kind"] == "section_header" and s["text"] is not None:
             heading = s["text"]
         tk = [] if s["text"] is None else toks(s["text"])
         n = 0 if s["text"] is None else len(tk)
@@ -142,10 +145,6 @@ def test_chunker_matches_model_on_arbitrary_spans(spark):
     texts, budget-boundary totals, shuffled offsets, headers anywhere."""
     import random
 
-    from pyspark.sql import types as T
-
-    from docling_fast_server_spark.operators.chunking import chunk_spans
-
     rng = random.Random(20260816)
     words = ["aa", "b", "ccc", "dd", ""]
     docs = []
@@ -162,25 +161,12 @@ def test_chunker_matches_model_on_arbitrary_spans(spark):
                 spans.append({"kind": kind, "text": txt, "media_ref": None, "offset": off})
         docs.append((f"d{doc_i}", spans))
 
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.StringType()),
-            T.StructField(
-                "spans",
-                T.ArrayType(
-                    T.StructType(
-                        [
-                            T.StructField("kind", T.StringType()),
-                            T.StructField("text", T.StringType()),
-                            T.StructField("media_ref", T.StringType()),
-                            T.StructField("offset", T.IntegerType()),
-                        ]
-                    )
-                ),
-            ),
-        ]
-    )
-    df = spark.createDataFrame(docs, schema)
+    _assert_matches_model(spark.createDataFrame(docs, _SPANS_DDL), docs)
+
+
+def _assert_matches_model(df, docs):
+    """chunk_spans(df) equals _model_chunks for every (doc_id, spans) in
+    `docs`, under both tokenizers."""
     for B, tokenizer in ((3, "ws"), (5, "bpe")):
         got = {}
         for r in chunk_spans(df, budget=B, tokenizer=tokenizer).collect():
@@ -188,21 +174,65 @@ def test_chunker_matches_model_on_arbitrary_spans(spark):
                 (r["chunk_idx"], r["heading"], r["chunk_text"], r["n_tokens"], r["n_spans"])
             )
         for doc_id, spans in docs:
-            want = _model_chunks(spans, B, tokenizer)
-            assert sorted(got.get(doc_id, [])) == sorted(want), (
-                tokenizer,
-                doc_id,
-                spans,
-                sorted(got.get(doc_id, [])),
-                sorted(want),
+            have, want = sorted(got.get(doc_id, [])), sorted(_model_chunks(spans, B, tokenizer))
+            diff = next((i for i, (a, b) in enumerate(zip(have, want)) if a != b), None)
+            assert have == want, (
+                tokenizer, doc_id, len(spans), len(have), len(want),
+                diff, diff is not None and (have[diff], want[diff]),
+                spans if len(spans) <= 8 else "...",
             )
+
+
+def _scan_depth_spans(rng, n, case):
+    """`n` spans in shuffled offset order. `case` places the headings:
+    "first" opens with a header, "none" has no header at all, "null"
+    opens with a NULL-text header and gives half the other headers NULL
+    text."""
+    words = ["aa", "b", "c.d", "e,f", "", "gg"]
+    spans = []
+    for off in rng.sample(range(n), n):
+        kind = rng.choice(["text", "text", "section_header", "picture"])
+        if case == "none" and kind == "section_header":
+            kind = "text"
+        if case != "none" and off == 0:
+            kind = "section_header"
+        if kind == "picture":
+            text = None
+        elif kind == "section_header" and case == "null" and (off == 0 or rng.random() < 0.5):
+            text = None
+        else:
+            text = " ".join(rng.choice(words) for _ in range(rng.randrange(0, 12)))
+        spans.append({"kind": kind, "text": text, "media_ref": None, "offset": off})
+    return spans
+
+
+def test_chunker_matches_model_at_scan_depths(spark):
+    """The log-step prefix scan against the model on both sides of every
+    stride it takes (1, 2, 4, ... 256), at exactly MAX_SPANS_PER_DOC
+    spans, and on one span of 20k tokens (one long piece run): headers
+    first, absent, or with NULL text; both tokenizers."""
+    import random
+
+    from docling_fast_server_spark.model import MAX_SPANS_PER_DOC
+
+    rng = random.Random(20261017)
+    docs = [
+        (f"n{n}-{case}", _scan_depth_spans(rng, n, case))
+        for n in (1, 2, 3, 4, 5, 8, 9, 16, 17, 255, 256, 257)
+        for case in ("first", "none", "null")
+    ]
+    docs.append(("max", _scan_depth_spans(rng, MAX_SPANS_PER_DOC, "null")))
+    long_text = " ".join(f"w{i}" if i % 7 else "x,y" for i in range(20_000))
+    long_span = {"kind": "text", "text": long_text, "media_ref": None, "offset": 0}
+    docs.append(("long-span", [long_span]))
+    assert len(docs[-2][1]) == MAX_SPANS_PER_DOC
+    _assert_matches_model(spark.createDataFrame(docs, _SPANS_DDL), docs)
 
 
 def test_big_doc_completes_via_window_route(spark):
     """A stored document past model.MAX_SPANS_PER_DOC (25k spans) fails
     the chunk job loudly, naming the document, its span count and the
-    ceiling — the in-array fold is quadratic in span count, so such a
-    document would otherwise be a minutes-long single-task straggler.
+    ceiling, the extraction envelope that also bounds the prefix scan.
     There is no longer a row-window route for it to complete through;
     the test keeps its name and pins the replacement contract. Building
     the chunk frame itself runs no Spark job."""
@@ -216,10 +246,7 @@ def test_big_doc_completes_via_window_route(spark):
         {"kind": "text", "text": f"a{i} b{i}", "media_ref": None, "offset": i}
         for i in range(n)
     ]
-    df = spark.createDataFrame(
-        [("d-big", spans)],
-        "doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
-    )
+    df = spark.createDataFrame([("d-big", spans)], _SPANS_DDL)
     sc = spark.sparkContext
     sc.setJobGroup("chunk-build", "chunk_spans frame construction")
     try:
@@ -229,6 +256,25 @@ def test_big_doc_completes_via_window_route(spark):
         sc.setLocalProperty("spark.jobGroup.id", None)
     with pytest.raises(Exception, match=f"d-big has {n} spans.*{MAX_SPANS_PER_DOC}"):
         chunks.collect()
+
+
+def test_tok_sql_escapes_the_pattern_literal(spark, monkeypatch):
+    """A BPE pattern holding a backslash and a quote reaches Spark's
+    regex engine unmangled: the Spark tokens equal re.findall of the
+    same pattern on a sample string."""
+    import re
+
+    from docling_fast_server_spark.operators import textstats
+    from docling_fast_server_spark.operators.chunking import _tok_sql
+
+    pat = r"[A-Za-z]+'[A-Za-z]+|[A-Za-z0-9]+|\.|\\|'"
+    monkeypatch.setattr(textstats, "BPE_RE", pat)
+    sample = "don't stop. it's a\\b 'x' 42"
+    got = spark.createDataFrame([(sample,)], "t string").selectExpr(
+        f"{_tok_sql('t', 'bpe')} AS k"
+    ).first()["k"]
+    assert got == re.findall(pat, sample)
+    assert "\\" in got and "'" in got
 
 
 def test_extraction_boundary_enforces_span_ceiling():

@@ -79,7 +79,7 @@ def test_chunking_is_shuffle_free(spark, sf_dir, tmp_path):
     stage: no Exchange, no Window, no Python eval. (Rounds 1-2 exploded
     to rows and hash-partitioned the full span payload by doc_id.) The
     same holds over a stored extraction table (the batch convert shape):
-    one scan, no Union of routing branches."""
+    one scan, no Union of routing branches, no concat-based fold."""
     from docling_fast_server_spark.operators.chunking import chunk_spans
     from docling_fast_server_spark.queries import extract_all
 
@@ -95,6 +95,10 @@ def test_chunking_is_shuffle_free(spark, sf_dir, tmp_path):
     for node in ("Exchange", "Window", "Union"):
         assert node not in plan, plan
     assert plan.count("FileScan") == 1, plan
+    # no array-accumulating fold (concat per span is quadratic), and each
+    # span's text is tokenized once, not once per piece
+    assert "concat(" not in plan, plan
+    assert plan.count("split(") == 1, plan
 
 
 def test_scan_pushdown(spark, sf_dir):
